@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** The one Spark-internal call the benchmark needs: wait until the
+  * listener bus has delivered every posted event, so a traced run's
+  * counts are complete before they are read.
+  */
+object PerfbenchAccess {
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
